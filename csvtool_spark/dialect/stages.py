@@ -12,8 +12,12 @@ Design rules:
 - every stage is a thin adapter over ``csvtool_spark.operators`` — no
   semantics live here, so the SQL surface and the Python API cannot drift;
 - stages stay deterministic and cross-engine oracle-pairable (md5 coins,
-  md5 MinHash lanes, pure Column expressions) — the dialect surface is the
-  reproducibility lane, same policy as the ``sample`` clause;
+  md5 MinHash lanes, DuckDB stage twins in ``stage_oracles``) — the
+  dialect surface is the reproducibility lane, same policy as the
+  ``sample`` clause;
+- a stage runs the same operator lane as batch ``pipeline.curate``;
+  per-row stages such as ``normalize``, ``langid`` and ``gopher`` cross
+  into Python as Arrow batch kernels;
 - column args are the RESULT schema's names: unquoted stage args resolve
   against ``df.columns`` case-insensitively (the dialect's addressing
   rule), quoted args are string literals.
@@ -340,16 +344,15 @@ def _stage_neardup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
 
 def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     """``langid(text [, as=lang_guess] [, keep=en])`` — append the
-    n-gram-marker language guess (operators.textstats.lang_id, JVM
-    kernel: the dialect surface stays whole-stage-codegen, no Python
-    workers); ``keep=`` also filters to that guess (the C4 language
-    gate)."""
+    n-gram-marker language guess (operators.textstats.lang_id — the same
+    Arrow kernel batch ``pipeline.curate`` runs); ``keep=`` also filters
+    to that guess (the C4 language gate)."""
     from csvtool_spark.operators.textstats import lang_id
 
     _no_extra_kwargs(st, {"as", "keep"})
     text = _text_arg(df, st)
     name = _out_name(df, st, "lang_guess")
-    out = df.withColumn(name, lang_id(F.col(text), kernel="jvm"))
+    out = df.withColumn(name, lang_id(F.col(text)))
     keep = st.kwargs.get("keep")
     if keep is not None:
         # C4-style language gate: keep only the requested guess. Validate
@@ -365,7 +368,7 @@ def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
                 f"{', '.join(sorted(allowed))}; got '{keep.val}'"
             )
         # gate ABOVE the langid projection (planshape): pushed below, the
-        # packed-marker aggregate fold would run twice per row
+        # Arrow kernel would run twice per row
         from csvtool_spark.operators.planshape import filter_computed
 
         out = filter_computed(out, F.col(name) == F.lit(want))

@@ -27,21 +27,16 @@ direction vector); the final assignment is a pure projection fused into
 the scan — no join, no shuffle of the vector table body beyond the
 per-iteration partial-aggregated centroid sums.
 
-Two assignment lanes (the ``minhash_signature_arrow`` precedent,
-dedup.py:127-174 — Spark evaluates higher-order-function lambdas on the
-interpreted path, so the k×dim fold per row is the constant factor that
-matters at corpus scale):
-
-- ``kernel='arrow'`` (default): one numpy kernel per Arrow batch —
-  exact int64 distances via vectorized ``(Q-C)²`` with a sliced
-  row×k×dim transient, and per-BATCH partial (count, Σq_d) sums during
-  the fit so each Lloyd round shuffles k rows per batch instead of the
-  vector body. Bit-identical to the Column lane (int64 adds/multiplies
-  wrap identically; quantization reproduces Spark ``F.round`` exactly —
-  see ``_half_away_np``), differential-tested per round.
-- ``kernel='column'``: the pure Column-tree fold — the lane the DuckDB
-  oracle SQL mirrors term-for-term, kept as the oracle twin and for
-  plans that must stay UDF-free.
+One lane, an Arrow batch kernel (the ``minhash_signature_arrow``
+precedent — Spark evaluates higher-order-function lambdas on the
+interpreted path, so a k×dim Column fold per row is the constant factor
+that matters at corpus scale): one numpy kernel per Arrow batch computes
+exact int64 distances via vectorized ``(Q-C)²`` with a sliced row×k×dim
+transient, and the fit emits per-BATCH partial (count, Σq_d) sums so each
+Lloyd round shuffles k rows per batch instead of the vector body.
+Quantization reproduces Spark ``F.round`` exactly (see ``_half_away_np``),
+and ``kmeans_oracle_sql`` — the DuckDB twin the tests compare against on
+the same frames — mirrors every step term-for-term.
 
 int64 envelope (validated, not assumed): with ``|x| ≤ X`` a component is
 ``≤ X·scale`` so a squared distance is ``≤ dim·(2·X·scale)²`` (4e10 for
@@ -61,39 +56,6 @@ from pyspark.sql import functions as F
 from csvtool_spark.functions.fixedpoint import half_away
 
 
-def _quantized(vec_col: str, scale: int):
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * scale, 0).cast("long"),
-    )
-
-
-def _dist2(qv, cvec: list[int]):
-    """Exact int64 squared L2 distance to a centroid literal."""
-    clit = F.array(*[F.lit(int(c)).cast("long") for c in cvec])
-    return F.aggregate(
-        F.zip_with(qv, clit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _assign(qv, centroids: list[list[int]]):
-    """(cluster, dist2) of the nearest centroid — lexicographic struct-min
-    over (dist2, j) literals breaks ties toward the lowest cluster id."""
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    _dist2(qv, c).alias("d"), F.lit(j).cast("long").alias("j")
-                )
-                for j, c in enumerate(centroids)
-            ]
-        )
-    )
-    return best["j"], best["d"]
-
-
 def _half_away_np(y):
     """Exact round-half-away-from-zero of a float64 ndarray → int64,
     reproducing Spark ``F.round(x, 0)`` (BigDecimal HALF_UP over the
@@ -108,8 +70,8 @@ def _half_away_np(y):
     Driver-side twin of the identical code inlined in the Arrow
     closures below (kept self-contained there so vanilla sessions can
     unpickle without this package importable — the
-    ``minhash_signature_arrow`` contract); the fit lane differential
-    test pins the two copies together."""
+    ``minhash_signature_arrow`` contract); the DuckDB oracle tests over
+    the fit pin the two copies together."""
     import numpy as np
 
     fl = np.floor(y)
@@ -132,12 +94,9 @@ def _arrow_assign_fn(cents: list[list[int]], scale: int, vec_name: str,
     """mapInPandas closure for the Arrow assignment lane: quantize +
     nearest-centroid per batch as one numpy kernel. Null vector → null
     (cluster, dist2); ragged/non-finite vectors RAISE by default (the
-    fit's validation pass excludes them — matching the Column lane's
-    behavior on the validated envelope, where the two lanes are
-    differential-tested bit-identical: int64 adds/multiplies wrap
-    identically and ``argmin`` first-occurrence ties == the struct-min
-    lowest-j rule). ``on_invalid='null'`` instead assigns those rows null
-    (cluster, dist2) like null vectors — the STREAMING contract: stream
+    fit's validation pass excludes them; ``argmin`` first-occurrence ties
+    == the oracle's lowest-j rule). ``on_invalid='null'`` instead assigns
+    those rows null (cluster, dist2) like null vectors — the STREAMING contract: stream
     input never passes through the fit's validation, and a raise inside
     mapInPandas fails the micro-batch, which a restart then replays into
     a crash loop on the same poison record.
@@ -145,8 +104,8 @@ def _arrow_assign_fn(cents: list[list[int]], scale: int, vec_name: str,
     Self-contained (imports + half-away inline) so a vanilla driver
     session can unpickle it on workers without this package importable —
     the ``minhash_signature_arrow`` contract; the inline ``half_away``
-    must stay identical to ``_half_away_np`` (fit-lane differential
-    test pins the copies together)."""
+    must stay identical to ``_half_away_np`` (the DuckDB oracle tests
+    over the fit pin the copies together)."""
     budget = _DIST_BUDGET
 
     def fn(batches):
@@ -232,8 +191,8 @@ def _arrow_partial_sums_fn(cents: list[list[int]], scale: int, vec_name: str):
     ``(__c, n, Σq_d)`` row per non-empty cluster — so the shuffle after
     it carries k rows per batch instead of the vector body (numpy-side
     map-combine; Spark's final ``SUM`` over int64 partials is exact and
-    order-independent, so the total equals the Column lane's direct
-    ``SUM`` bit-for-bit). Upstream filters null vectors; same validated
+    order-independent, so the total equals a direct ``SUM`` bit-for-bit).
+    Upstream filters null vectors; same validated
     envelope + self-containment contract as ``_arrow_assign_fn``."""
     budget = _DIST_BUDGET
 
@@ -293,22 +252,13 @@ def kmeans_fit(
     k: int = 8,
     scale: int = 10_000,
     iters: int = 2,
-    kernel: str = "arrow",
 ) -> list[list[int]]:
     """Run ``iters`` fixed-point Lloyd rounds; returns the k×dim integer
     centroid table (bounded driver artifact).  Null vectors are excluded
-    from the fit (they get cluster/dist2 null at assignment).
-
-    ``kernel='arrow'`` (default) runs each round as mapInPandas batch
-    partial sums (see module doc); ``kernel='column'`` is the pure
-    Column-tree oracle twin. Bit-identical (differential-tested)."""
+    from the fit (they get cluster/dist2 null at assignment). Each round
+    is mapInPandas batch partial sums (see module doc)."""
     if k < 1 or iters < 0:
         raise ValueError(f"kmeans_fit: need k >= 1 and iters >= 0, got {k=}, {iters=}")
-    if kernel not in ("arrow", "column"):
-        raise ValueError(f"kmeans_fit: unknown kernel {kernel!r}")
-    vecs = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("__id"), _quantized(vec_col, scale).alias("__qv")
-    )
 
     # validation pass (one cheap agg, the PCA pattern — pca.py:92-135):
     # ragged dims → zip_with silently null-pads; NaN/Inf → Spark rounds
@@ -358,79 +308,39 @@ def kmeans_fit(
             "envelope (2^63) — lower scale"
         )
 
-    if kernel == "arrow":
-        import numpy as np
+    import numpy as np
 
-        # raw vectors persist for the fit's lifetime (seed pass + every
-        # Lloyd round; same release discipline as the column lane below);
-        # quantization happens inside the batch kernel, and the seed
-        # centroids take the identical driver-side path (_half_away_np).
-        raw = (
-            df.filter(F.col(vec_col).isNotNull())
-            .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-            .persist()
-        )
-        try:
-            seed_rows = raw.orderBy("__id").limit(k).collect()
-            centroids = [
-                _half_away_np(
-                    np.asarray(list(r["__v"]), dtype=np.float64) * scale
-                ).tolist()
-                for r in seed_rows
-            ]
-            dim = len(centroids[0])
-            for _ in range(iters):
-                part = raw.select("__v").mapInPandas(
-                    _arrow_partial_sums_fn(centroids, scale, "__v"),
-                    schema="__c long, n long, s array<long>",
-                )
-                sums = (
-                    part.groupBy("__c")
-                    .agg(
-                        F.sum("n").alias("n"),
-                        *[
-                            F.sum(F.element_at("s", d + 1)).alias(f"s_{d}")
-                            for d in range(dim)
-                        ],
-                    )
-                    .collect()
-                )
-                by_c = {int(r["__c"]): r for r in sums}
-                centroids = [
-                    [
-                        half_away(float(by_c[j][f"s_{d}"]) / by_c[j]["n"])
-                        for d in range(dim)
-                    ]
-                    if j in by_c
-                    else centroids[j]
-                    for j in range(k)
-                ]
-            return centroids
-        finally:
-            raw.unpersist()
-
-    # the quantized projection feeds the seed pass AND every Lloyd round —
-    # persist for the fit's lifetime so the scan + quantize run once, and
-    # ALWAYS release before returning (fit output is a driver-side list;
-    # nothing lazy keeps reading the cache). At corpus scales where the
-    # projection exceeds cluster cache, Spark's MEMORY_AND_DISK spills —
-    # still cheaper than iters+1 full rescans of the source.
-    vecs = vecs.persist()
+    # raw vectors persist for the fit's lifetime (seed pass + every Lloyd
+    # round) and are ALWAYS released before returning (fit output is a
+    # driver-side list; nothing lazy keeps reading the cache). Quantization
+    # happens inside the batch kernel, and the seed centroids take the
+    # identical driver-side path (_half_away_np).
+    raw = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+        .persist()
+    )
     try:
         # deterministic seed: quantized vectors of the k lowest ids
-        seed_rows = vecs.orderBy("__id").limit(k).collect()
-        centroids = [list(r["__qv"]) for r in seed_rows]
+        seed_rows = raw.orderBy("__id").limit(k).collect()
+        centroids = [
+            _half_away_np(
+                np.asarray(list(r["__v"]), dtype=np.float64) * scale
+            ).tolist()
+            for r in seed_rows
+        ]
         dim = len(centroids[0])
-
         for _ in range(iters):
-            cl, _d = _assign(F.col("__qv"), centroids)
+            part = raw.select("__v").mapInPandas(
+                _arrow_partial_sums_fn(centroids, scale, "__v"),
+                schema="__c long, n long, s array<long>",
+            )
             sums = (
-                vecs.select(cl.alias("__c"), "__qv")
-                .groupBy("__c")
+                part.groupBy("__c")
                 .agg(
-                    F.count(F.lit(1)).alias("n"),
+                    F.sum("n").alias("n"),
                     *[
-                        F.sum(F.element_at("__qv", d + 1)).alias(f"s_{d}")
+                        F.sum(F.element_at("s", d + 1)).alias(f"s_{d}")
                         for d in range(dim)
                     ],
                 )
@@ -448,7 +358,7 @@ def kmeans_fit(
             ]
         return centroids
     finally:
-        vecs.unpersist()
+        raw.unpersist()
 
 
 def kmeans_assign(
@@ -458,52 +368,36 @@ def kmeans_assign(
     centroids: list[list[int]],
     scale: int = 10_000,
     extra_cols: tuple[str, ...] = (),
-    kernel: str = "arrow",
     on_invalid: str = "raise",
 ) -> DataFrame:
     """Final assignment pass: (id, *extra, cluster, dist2) — map-only
-    over the scan either way (centroid literals ride the task closure /
-    the pickled kernel): ``kernel='arrow'`` (default) is the vectorized
-    numpy batch kernel, ``kernel='column'`` the Column-tree oracle twin
-    (k interpreted HOF folds per row — correct plan shape, ~k× the
-    constant factor). Bit-identical outputs, differential-tested.
+    over the scan (the centroid table rides the pickled numpy batch
+    kernel).
 
     ``on_invalid``: ``'raise'`` (default — batch input passes the fit's
     validation, so a ragged/non-finite vector is a pipeline bug worth
     failing on) or ``'null'`` (assign null cluster/dist2 — the streaming
-    lane, where a raise would crash-loop the query on a poison record;
-    Arrow kernel only)."""
+    lane, where a raise would crash-loop the query on a poison record)."""
     if on_invalid not in ("raise", "null"):
         raise ValueError(f"kmeans_assign: unknown on_invalid {on_invalid!r}")
-    if kernel == "arrow":
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        cents = [[int(c) for c in row] for row in centroids]
-        if not cents or len({len(c) for c in cents}) != 1:
-            raise ValueError("kmeans_assign: empty or ragged centroid table")
-        fields = {f.name: f for f in df.schema.fields}
-        out_schema = T.StructType(
-            [fields[id_col]]
-            + [fields[c] for c in extra_cols]
-            + [
-                T.StructField("cluster", T.LongType()),
-                T.StructField("dist2", T.LongType()),
-            ]
-        )
-        return df.select(id_col, *extra_cols, vec_col).mapInPandas(
-            _arrow_assign_fn(cents, int(scale), vec_col, id_col,
-                             list(extra_cols), on_invalid=on_invalid),
-            schema=out_schema,
-        )
-    if kernel != "column":
-        raise ValueError(f"kmeans_assign: unknown kernel {kernel!r}")
-    qv = _quantized(vec_col, scale)
-    cl, d2 = _assign(qv, centroids)
-    return df.select(
-        id_col,
-        *extra_cols,
-        F.when(F.col(vec_col).isNotNull(), cl).alias("cluster"),
-        F.when(F.col(vec_col).isNotNull(), d2).alias("dist2"),
+    cents = [[int(c) for c in row] for row in centroids]
+    if not cents or len({len(c) for c in cents}) != 1:
+        raise ValueError("kmeans_assign: empty or ragged centroid table")
+    fields = {f.name: f for f in df.schema.fields}
+    out_schema = T.StructType(
+        [fields[id_col]]
+        + [fields[c] for c in extra_cols]
+        + [
+            T.StructField("cluster", T.LongType()),
+            T.StructField("dist2", T.LongType()),
+        ]
+    )
+    return df.select(id_col, *extra_cols, vec_col).mapInPandas(
+        _arrow_assign_fn(cents, int(scale), vec_col, id_col,
+                         list(extra_cols), on_invalid=on_invalid),
+        schema=out_schema,
     )
 
 
@@ -515,13 +409,11 @@ def kmeans(
     scale: int = 10_000,
     iters: int = 2,
     extra_cols: tuple[str, ...] = (),
-    kernel: str = "arrow",
 ) -> DataFrame:
     """fit + assign in one call (the catalog entry)."""
-    cents = kmeans_fit(df, vec_col, id_col, k=k, scale=scale, iters=iters,
-                       kernel=kernel)
+    cents = kmeans_fit(df, vec_col, id_col, k=k, scale=scale, iters=iters)
     return kmeans_assign(df, vec_col, id_col, cents, scale=scale,
-                         extra_cols=extra_cols, kernel=kernel)
+                         extra_cols=extra_cols)
 
 
 def kmeans_oracle_sql(
@@ -607,7 +499,6 @@ def cluster_balanced_sample(
     scale: int = 10_000,
     iters: int = 2,
     salt: str = "cb",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Cluster-balanced corpus sampling: fit k-means, then keep a
     deterministic md5-coin sample of ``per_cluster`` vectors from EACH
@@ -632,11 +523,10 @@ def cluster_balanced_sample(
 
     from csvtool_spark.functions.hashing import md5_prefix_long
 
-    cents = kmeans_fit(df, vec_col, id_col, k=k, scale=scale, iters=iters,
-                       kernel=kernel)
-    assigned = kmeans_assign(
-        df, vec_col, id_col, cents, scale=scale, kernel=kernel
-    ).filter(F.col("cluster").isNotNull())
+    cents = kmeans_fit(df, vec_col, id_col, k=k, scale=scale, iters=iters)
+    assigned = kmeans_assign(df, vec_col, id_col, cents, scale=scale).filter(
+        F.col("cluster").isNotNull()
+    )
     coin = md5_prefix_long(
         F.concat_ws("#", F.lit(salt), F.col(id_col).cast("string"))
     )

@@ -2,7 +2,8 @@
 
 Scale design (the whole point at 100 TB):
 - Signatures (minhash/simhash) are computed in ONE projection pass over the
-  corpus — pure column expressions, no UDFs, no shuffle.
+  corpus, no shuffle: the xx64 family as one Arrow numpy kernel per batch
+  over JVM-computed hashes, the md5 family as a Column fold.
 - Candidate generation is LSH banding: explode to (band, key) rows and
   self-join on the band key. This replaces the O(n²) all-pairs comparison
   with an equi-join whose cost tracks the number of true near-duplicates;
@@ -52,7 +53,7 @@ def _expr_name(col) -> str | None:
     The expr-string fast paths below fire only for internal call sites
     that pass the staged column NAME; Column-typed callers keep the
     Column-tree reference implementation (same semantics, pinned by the
-    kernel-differential tests)."""
+    Arrow-vs-Column signature differential tests)."""
     return f"`{col}`" if isinstance(col, str) else None
 
 
@@ -386,15 +387,14 @@ def _minhash_signatures(
     id_col: str,
     n_hashes: int,
     shingle_k: int,
-    kernel: str,
     hash_family: str,
 ) -> DataFrame:
     """(id, __sig) — the staged shingle→signature pipeline shared by the
     within-corpus and cross-corpus operators. Tokens/shingles materialize
     as columns so the signature fold consumes a computed array instead of
-    re-inlining the shingle expression."""
-    if kernel not in ("arrow", "jvm"):
-        raise ValueError(f"kernel must be 'arrow' or 'jvm', got {kernel!r}")
+    re-inlining the shingle expression. The xx64 family runs the Arrow
+    lane-minima kernel; md5 runs the md5 fold (its cost is the md5 calls,
+    not the lane fold, and it is the lane the DuckDB twin replays)."""
     if hash_family not in ("xx64", "md5"):
         raise ValueError(f"hash_family must be 'xx64' or 'md5', got {hash_family!r}")
     toks = tokens(normalized(F.col(text_col)))
@@ -408,11 +408,7 @@ def _minhash_signatures(
         staged = df.select(F.col(id_col), toks.alias("__toks")).select(
             id_col, hashed_shingles("__toks", shingle_k).alias("__shingles")
         )
-        sig_expr = (
-            minhash_signature_arrow(n_hashes)(F.col("__shingles"))
-            if kernel == "arrow"
-            else minhash_signature(F.col("__shingles"), n_hashes)
-        )
+        sig_expr = minhash_signature_arrow(n_hashes)(F.col("__shingles"))
     return staged.select(id_col, sig_expr.alias("__sig"))
 
 
@@ -424,7 +420,6 @@ def near_dup_pairs_minhash(
     n_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    kernel: str = "arrow",
     hash_family: str = "xx64",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → signature → band →
@@ -433,18 +428,15 @@ def near_dup_pairs_minhash(
     bands=16 × rows=4 over 64 hashes ⇒ s-curve threshold ≈ (1/16)^(1/4) ≈
     0.5 Jaccard on shingle sets — recall-biased for a 0.6 verify cut.
 
-    ``kernel``: 'arrow' (default — numpy lane minima per Arrow batch) or
-    'jvm' (pure Column fold). Same hash family, bit-identical signatures
-    (pinned by test), so the pair set is kernel-independent.
-
-    ``hash_family``: 'xx64' (default, fastest) or 'md5' — md5-slice lanes
-    plus string band keys, the cross-engine-deterministic twin whose whole
-    pipeline a DuckDB CTE reproduces exactly (``q_dedup_minhash_det``).
-    The md5 family always uses the JVM fold (its cost profile is the md5
-    calls, not the lane fold)."""
+    ``hash_family``: 'xx64' (default, fastest — numpy lane minima per
+    Arrow batch, bit-identical to the ``minhash_signature`` Column fold it
+    is tested against) or 'md5' — md5-slice lanes plus string band keys,
+    the cross-engine-deterministic twin whose whole pipeline a DuckDB CTE
+    reproduces exactly (``q_dedup_minhash_det``). The md5 family runs the
+    JVM fold (its cost profile is the md5 calls, not the lane fold)."""
     rows = n_hashes // bands
     sigs = _minhash_signatures(
-        df, text_col, id_col, n_hashes, shingle_k, kernel, hash_family
+        df, text_col, id_col, n_hashes, shingle_k, hash_family
     )
     band_hash = "string" if hash_family == "md5" else "xx64"
     pairs = candidate_pairs(
@@ -662,22 +654,20 @@ def simhash64_arrow():
 
 def near_dup_pairs_simhash(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 8,
-    hash_family: str = "xx64", kernel: str = "arrow",
+    hash_family: str = "xx64",
 ) -> DataFrame:
     """SimHash near-dup: 4×16-bit chunk blocking (any pair within Hamming
     distance ≤ 3·16 shares ≥1 exact chunk; wider distances are best-effort)
     then exact Hamming verify via bit_count(xor). ``hash_family`` as in
     ``simhash64`` — 'md5' makes the whole pipeline oracle-reproducible.
-    ``kernel``: 'arrow' (default; numpy vote fold over JVM-computed token
-    hashes — bit-identical, pinned by differential test) or 'jvm' (pure
-    Column fold). The md5 family always uses the JVM fold (its cost is
+    The xx64 family runs the numpy vote fold over JVM-computed token
+    hashes (``simhash64_arrow`` — bit-identical to the ``simhash64``
+    Column fold it is tested against); md5 runs the JVM fold (its cost is
     the md5 calls, and it exists for the oracle twin, not throughput)."""
-    if kernel not in ("arrow", "jvm"):
-        raise ValueError(f"kernel must be 'arrow' or 'jvm', got {kernel!r}")
     toks = tokens(normalized(F.col(text_col)))
     # persisted: the chunk self-join reads this twice, and the 64-lane
     # simhash vote fold is the expensive part — compute it once.
-    if hash_family == "xx64" and kernel == "arrow":
+    if hash_family == "xx64":
         staged = df.select(
             F.col(id_col),
             F.transform(toks, lambda t: F.xxhash64(t)).alias("__th"),
@@ -1247,7 +1237,6 @@ def cross_corpus_neardup(
     n_hashes: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    kernel: str = "arrow",
     hash_family: str = "xx64",
 ) -> DataFrame:
     """Near-dup pairs ACROSS two corpora, never within one: "does this
@@ -1279,12 +1268,12 @@ def cross_corpus_neardup(
     band_hash = "string" if hash_family == "md5" else "xx64"
     b_new = _banded(
         _minhash_signatures(new_df, text_col, id_col, n_hashes, shingle_k,
-                            kernel, hash_family),
+                            hash_family),
         id_col, "__sig", bands, rows, band_hash,
     ).persist()
     b_ref = _banded(
         _minhash_signatures(ref_df, text_col, id_col, n_hashes, shingle_k,
-                            kernel, hash_family),
+                            hash_family),
         id_col, "__sig", bands, rows, band_hash,
     ).persist()
 
@@ -1339,7 +1328,6 @@ def minhash_recall_eval(
     shingle_k: int = 3,
     salt: str = "mre",
     hash_family: str = "md5",
-    kernel: str = "jvm",
 ) -> DataFrame:
     """recall of MinHash-LSH banding against EXACT shingle-Jaccard ground
     truth, on a deterministic document sample — the dedup twin of
@@ -1392,7 +1380,7 @@ def minhash_recall_eval(
         sample, text_col, id_col, threshold=threshold, k=shingle_k
     )
     sigs = _minhash_signatures(
-        sample, text_col, id_col, n_hashes, shingle_k, kernel, hash_family
+        sample, text_col, id_col, n_hashes, shingle_k, hash_family
     )
     band_hash = "string" if hash_family == "md5" else "xx64"
     cand = candidate_pairs(

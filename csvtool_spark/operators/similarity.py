@@ -64,8 +64,6 @@ def ann_bruteforce(
     s = 0.0
     for v in vals:
         s += v * v
-    import math
-
     qnorm = math.sqrt(s)
     vd = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
     dot_vq = (
@@ -805,8 +803,6 @@ def sq_code_py(x: float, mn: float, mx: float) -> int:
     Non-finite query components are rejected up front — there is no
     meaningful code for them, and failing clearly beats math.floor's
     bare conversion error mid-probe."""
-    import math
-
     if not math.isfinite(x):
         raise ValueError(f"query vector component is not finite: {x!r}")
     if not mx > mn:
@@ -1112,7 +1108,6 @@ def ann_recall_eval(
     n_tables: int = 6,
     multiprobe: int = 1,
     seed: int = 42,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """recall@k of the SRP-LSH probe against exact brute force, per query
     — the eval harness an ANN deployment owes its tuning loop (how much
@@ -1136,121 +1131,145 @@ def ann_recall_eval(
     oracle's ``list_reduce``), cosine the shared ``_cos_sql`` shape, and
     ``recall`` is one exact double division by the integer literal k.
 
-    Two scored lanes, bit-identical and differential-tested:
-    ``kernel='arrow'`` (default) computes the |Q| dots, the row norm and
-    the SRP buckets in one numpy batch kernel (column-wise accumulation
-    preserves the fold order — see ``_arrow_ann_scored_fn``) and leaves
-    the division + round(…, 6) on the JVM so the rounding engine never
-    changes; ``kernel='column'`` is the pure Column-tree twin the DuckDB
-    oracle mirrors. The Column lane's ~(n_tables·n_planes + 3·|Q|)
-    interpreted HOF folds per row were the dominant cost (~1 ms/row
-    measured round 13); the query-side norm is folded on the driver with
-    the same sequential order either way (the ``ann_bruteforce``
-    precedent — it is a constant, so the JVM must not re-derive it per
-    row)."""
-    from pyspark.sql import Window
+    Scoring is one numpy batch kernel computing the |Q| dots, the row
+    norm and the SRP buckets (column-wise accumulation preserves the fold
+    order — see ``_arrow_ann_scored_fn``); the division + round(…, 6)
+    stay on the JVM so the rounding engine never changes. The query-side
+    norm is folded on the driver in the same sequential order (the
+    ``ann_bruteforce`` precedent — it is a constant, so the JVM must not
+    re-derive it per row). ``ann_recall_reference`` is the Column-tree
+    scoring it is tested against."""
+    from pyspark.sql.pandas.functions import pandas_udf
 
+    planes = _recall_planes(queries, n_planes, n_tables, seed)
+    items = sorted(queries.items())
+    qmeta = F.array(
+        *[
+            F.struct(
+                F.lit(int(qid)).cast("long").alias("qid"),
+                F.lit(i + 1).cast("int").alias("ix"),
+                F.lit(math.sqrt(_seq_dot(vec, vec))).alias("qn"),
+                F.array(
+                    *[
+                        F.lit(int(b)).cast("long")
+                        for b in _query_buckets(
+                            vec, n_planes, n_tables, multiprobe, seed
+                        )
+                    ]
+                ).alias("probes"),
+            )
+            for i, (qid, vec) in enumerate(items)
+        ]
+    )
+    udf = pandas_udf(
+        _arrow_ann_scored_fn(
+            [[float(x) for x in v] for _, v in items],
+            [[[float(x) for x in row] for row in p] for p in planes],
+            n_planes,
+        ),
+        "struct<dots:array<double>,nv:double,rb:array<long>>",
+    )
+    den = F.col("__s.nv") * F.col("q.qn")
+    scored = (
+        df.select(F.col(id_col), udf(F.col(vec_col)).alias("__s"))
+        .select(F.col(id_col), "__s", F.explode(qmeta).alias("q"))
+        .filter(F.col(id_col) != F.col("q.qid"))  # self never counts
+        .select(
+            F.col("q.qid").alias("qid"),
+            F.col(id_col),
+            F.round(
+                F.element_at(F.col("__s.dots"), F.col("q.ix"))
+                / F.when(den > 0, den),
+                6,
+            ).alias("cos"),
+            F.arrays_overlap(F.col("__s.rb"), F.col("q.probes")).alias("__cand"),
+        )
+    )
+    return _recall_from_scored(df, id_col, scored, queries, k)
+
+
+def ann_recall_reference(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    queries: dict[int, list[float]],
+    k: int = 10,
+    n_planes: int = 4,
+    n_tables: int = 6,
+    multiprobe: int = 1,
+    seed: int = 42,
+) -> DataFrame:
+    """``ann_recall_eval`` with pure Column-tree scoring — the term-for-
+    term shape the DuckDB oracle mirrors, kept as the reference the Arrow
+    scoring is tested against (at k past the corpus size and on null /
+    wrong-dim rows, where no catalog row reaches). Its
+    ~(n_tables·n_planes + 3·|Q|) interpreted HOF folds per row cost about
+    1 ms/row, so no production path calls it."""
+    planes = _recall_planes(queries, n_planes, n_tables, seed)
+    qarr = F.array(
+        *[
+            F.struct(
+                F.lit(int(qid)).cast("long").alias("qid"),
+                F.array(*[F.lit(float(x)) for x in vec]).alias("qv"),
+                F.array(
+                    *[
+                        F.lit(int(b)).cast("long")
+                        for b in _query_buckets(
+                            vec, n_planes, n_tables, multiprobe, seed
+                        )
+                    ]
+                ).alias("probes"),
+            )
+            for qid, vec in sorted(queries.items())
+        ]
+    )
+    v = _vec_d(F.col(vec_col))
+    row_buckets = F.array(
+        *[
+            F.lit(t << n_planes).cast("long").bitwiseOR(
+                srp_signature(F.col(vec_col), planes[t])
+            )
+            for t in range(n_tables)
+        ]
+    )
+    scored = (
+        df.select(
+            F.col(id_col), v.alias("__v"), row_buckets.alias("__rb"),
+            F.explode(qarr).alias("q"),
+        )
+        .filter(F.col(id_col) != F.col("q.qid"))  # self never counts
+        .select(
+            F.col("q.qid").alias("qid"),
+            F.col(id_col),
+            cosine(F.col("__v"), F.col("q.qv")).alias("cos"),
+            F.arrays_overlap(F.col("__rb"), F.col("q.probes")).alias("__cand"),
+        )
+    )
+    return _recall_from_scored(df, id_col, scored, queries, k)
+
+
+def _recall_planes(queries: dict, n_planes: int, n_tables: int, seed: int):
     if not queries:
         raise ValueError("ann_recall_eval: queries must be non-empty")
     dim = len(next(iter(queries.values())))
-    planes = [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-    if kernel not in ("arrow", "column"):
-        raise ValueError(f"ann_recall_eval: unknown kernel {kernel!r}")
+    return [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
 
-    # persisted: the exact and the LSH branch both read this scan (their
-    # pre-window filters differ, so Spark cannot reuse the exchange) —
-    # without the persist the corpus scan + |corpus|·|Q| cosine matrix
-    # (the dominant cost) would compute twice. Attached to the result
-    # (functions.caching) so long-lived sessions can release_stages()
-    # after consuming the bounded |Q|-row output (the bm25 pattern).
-    if kernel == "arrow":
-        from pyspark.sql.pandas.functions import pandas_udf
 
-        items = sorted(queries.items())
-        qmeta = F.array(
-            *[
-                F.struct(
-                    F.lit(int(qid)).cast("long").alias("qid"),
-                    F.lit(i + 1).cast("int").alias("ix"),
-                    F.lit(math.sqrt(_seq_dot(vec, vec))).alias("qn"),
-                    F.array(
-                        *[
-                            F.lit(int(b)).cast("long")
-                            for b in _query_buckets(
-                                vec, n_planes, n_tables, multiprobe, seed
-                            )
-                        ]
-                    ).alias("probes"),
-                )
-                for i, (qid, vec) in enumerate(items)
-            ]
-        )
-        udf = pandas_udf(
-            _arrow_ann_scored_fn(
-                [[float(x) for x in v] for _, v in items],
-                [[[float(x) for x in row] for row in p] for p in planes],
-                n_planes,
-            ),
-            "struct<dots:array<double>,nv:double,rb:array<long>>",
-        )
-        den = F.col("__s.nv") * F.col("q.qn")
-        scored = (
-            df.select(F.col(id_col), udf(F.col(vec_col)).alias("__s"))
-            .select(F.col(id_col), "__s", F.explode(qmeta).alias("q"))
-            .filter(F.col(id_col) != F.col("q.qid"))  # self never counts
-            .select(
-                F.col("q.qid").alias("qid"),
-                F.col(id_col),
-                F.round(
-                    F.element_at(F.col("__s.dots"), F.col("q.ix"))
-                    / F.when(den > 0, den),
-                    6,
-                ).alias("cos"),
-                F.arrays_overlap(
-                    F.col("__s.rb"), F.col("q.probes")
-                ).alias("__cand"),
-            )
-        ).persist()
-    else:
-        qarr = F.array(
-            *[
-                F.struct(
-                    F.lit(int(qid)).cast("long").alias("qid"),
-                    F.array(*[F.lit(float(x)) for x in vec]).alias("qv"),
-                    F.array(
-                        *[
-                            F.lit(int(b)).cast("long")
-                            for b in _query_buckets(
-                                vec, n_planes, n_tables, multiprobe, seed
-                            )
-                        ]
-                    ).alias("probes"),
-                )
-                for qid, vec in sorted(queries.items())
-            ]
-        )
-        v = _vec_d(F.col(vec_col))
-        row_buckets = F.array(
-            *[
-                F.lit(t << n_planes).cast("long").bitwiseOR(
-                    srp_signature(F.col(vec_col), planes[t])
-                )
-                for t in range(n_tables)
-            ]
-        )
-        scored = (
-            df.select(
-                F.col(id_col), v.alias("__v"), row_buckets.alias("__rb"),
-                F.explode(qarr).alias("q"),
-            )
-            .filter(F.col(id_col) != F.col("q.qid"))  # self never counts
-            .select(
-                F.col("q.qid").alias("qid"),
-                F.col(id_col),
-                cosine(F.col("__v"), F.col("q.qv")).alias("cos"),
-                F.arrays_overlap(F.col("__rb"), F.col("q.probes")).alias("__cand"),
-            )
-        ).persist()
+def _recall_from_scored(
+    df: DataFrame, id_col: str, scored: DataFrame, queries: dict, k: int
+) -> DataFrame:
+    """Exact and LSH top-k per query from one (qid, id, cos, __cand)
+    scoring, then the shared recall output.
+
+    ``scored`` is persisted: the exact and the LSH branch both read it
+    (their pre-window filters differ, so Spark cannot reuse the exchange)
+    — without the persist the corpus scan + |corpus|·|Q| cosine matrix
+    (the dominant cost) would compute twice. It is attached to the result
+    (functions.caching) so long-lived sessions can release_stages() after
+    consuming the bounded |Q|-row output (the bm25 pattern)."""
+    from pyspark.sql import Window
+
+    scored = scored.persist()
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col(id_col))
     exact = (
         scored.withColumn("rn", F.row_number().over(w))
@@ -1468,7 +1487,6 @@ def pq_train_kmeans(
     m: int = 8,
     n_cents: int = 16,
     iters: int = 2,
-    kernel: str = "arrow",
     seed_codebook: PQCodebook | None = None,
 ) -> PQCodebook:
     """Lloyd-TRAINED PQ codebook: per-subspace fixed-point k-means over
@@ -1492,15 +1510,11 @@ def pq_train_kmeans(
 
     Scale shape: each round is ONE map-only pass (the Arrow partial-sums
     kernel) + a codebook-sized shuffle (≤ m·n_cents groups) + a bounded
-    collect (m·n_cents·(dsub+1) ints). ``kernel='column'`` is the pure
-    Column twin (``_packed_codes`` assignment + explode/groupBy),
-    bit-identical (differential-tested)."""
+    collect (m·n_cents·(dsub+1) ints)."""
     from csvtool_spark.functions.fixedpoint import half_away
 
     if iters < 0:
         raise ValueError(f"pq_train_kmeans: need iters >= 0, got {iters}")
-    if kernel not in ("arrow", "column"):
-        raise ValueError(f"pq_train_kmeans: unknown kernel {kernel!r}")
     if seed_codebook is not None:
         if seed_codebook.m != m or len(seed_codebook.cents) > n_cents:
             raise ValueError(
@@ -1525,41 +1539,10 @@ def pq_train_kmeans(
     vecs = df.select(F.col(vec_col)).persist()
     try:
         for _ in range(iters):
-            if kernel == "arrow":
-                part = vecs.mapInPandas(
-                    _arrow_pq_partial_sums_fn(
-                        cb.mn, cb.mx, cb.m, cb.cents, vec_col
-                    ),
-                    schema="s int, c int, n long, sums array<long>",
-                )
-            else:
-                enc = vecs.select(
-                    _packed_codes(cb, vec_col).alias("__pc")
-                ).select(
-                    F.col("__pc")["codes"].alias("__codes"),
-                    F.col("__pc")["pq"].alias("__pq"),
-                )
-                part = enc.select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(s).cast("int").alias("s"),
-                                    F.col("__pq")[s].alias("c"),
-                                    F.transform(
-                                        F.slice(
-                                            "__codes", s * dsub + 1, dsub
-                                        ),
-                                        lambda x: x.cast("long"),
-                                    ).alias("sums"),
-                                )
-                                for s in range(cb.m)
-                            ]
-                        )
-                    ).alias("e")
-                ).select(
-                    "e.s", "e.c", F.lit(1).cast("long").alias("n"), "e.sums"
-                )
+            part = vecs.mapInPandas(
+                _arrow_pq_partial_sums_fn(cb.mn, cb.mx, cb.m, cb.cents, vec_col),
+                schema="s int, c int, n long, sums array<long>",
+            )
             rows = (
                 part.groupBy("s", "c")
                 .agg(
@@ -1604,7 +1587,6 @@ def pq_encode(
     vec_col: str,
     id_col: str,
     cb: PQCodebook,
-    kernel: str = "arrow",
     on_invalid: str = "raise",
     extras: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -1613,46 +1595,35 @@ def pq_encode(
     Codes use the codebook's OWN bounds, so encoding a different frame
     than the one trained on (new shards, a query batch) stays consistent.
 
-    Two lanes, bit-identical and differential-tested (the
-    ``kmeans_assign`` precedent): ``kernel='arrow'`` (default) encodes
-    each Arrow batch as one numpy kernel — the 100 TB lane, since the
-    Column form's m·n_cents distance folds run on Spark's interpreted
-    HOF path; ``kernel='column'`` is the pure Column-tree twin
-    (struct-min argmin, no UDF) that the DuckDB oracles mirror and the
-    streaming literal projection composes from. Both are map-only: no
-    shuffle, no collect; the output is the 100 TB artifact — m ints per
-    vector instead of dim floats (~32× smaller scan for dim=64, m=8).
+    Each Arrow batch encodes as one numpy kernel (the ``kmeans_assign``
+    precedent) — a Column form's m·n_cents distance folds would run on
+    Spark's interpreted HOF path. The encode is map-only: no shuffle, no
+    collect; the output is the 100 TB artifact — m ints per vector
+    instead of dim floats (~32× smaller scan for dim=64, m=8). Tests
+    check it bit-for-bit against ``_packed_codes``, the Column-tree
+    encode (struct-min argmin) that the streaming PQ lane composes from
+    and the DuckDB oracles mirror.
 
     ``on_invalid``: 'raise' (default — a NULL/ragged/non-finite vector
     is a pipeline bug; see ``_packed_codes`` for why such vectors must
     never encode) or 'null' (null pq_codes — the streaming contract).
     ``extras`` ride through unchanged: (id, *extras, pq_codes)."""
-    if kernel == "arrow":
-        from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-        if on_invalid not in ("raise", "null"):
-            raise ValueError(f"pq_encode: unknown on_invalid {on_invalid!r}")
-        fields = {f.name: f for f in df.schema.fields}
-        out_schema = T.StructType(
-            [fields[id_col]]
-            + [fields[c] for c in extras]
-            + [T.StructField("pq_codes", T.ArrayType(T.IntegerType()))]
-        )
-        return df.select(id_col, *extras, vec_col).mapInPandas(
-            _arrow_pq_encode_fn(
-                cb.mn, cb.mx, cb.m, cb.cents, vec_col, id_col,
-                on_invalid=on_invalid, extras=list(extras),
-            ),
-            schema=out_schema,
-        )
-    if kernel != "column":
-        raise ValueError(f"pq_encode: unknown kernel {kernel!r}")
-    return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in extras],
-        _packed_codes(cb, vec_col, on_invalid=on_invalid)["pq"].alias(
-            "pq_codes"
+    if on_invalid not in ("raise", "null"):
+        raise ValueError(f"pq_encode: unknown on_invalid {on_invalid!r}")
+    fields = {f.name: f for f in df.schema.fields}
+    out_schema = T.StructType(
+        [fields[id_col]]
+        + [fields[c] for c in extras]
+        + [T.StructField("pq_codes", T.ArrayType(T.IntegerType()))]
+    )
+    return df.select(id_col, *extras, vec_col).mapInPandas(
+        _arrow_pq_encode_fn(
+            cb.mn, cb.mx, cb.m, cb.cents, vec_col, id_col,
+            on_invalid=on_invalid, extras=list(extras),
         ),
+        schema=out_schema,
     )
 
 
@@ -1668,7 +1639,7 @@ def _arrow_pq_encode_fn(
 ):
     """mapInPandas closure for the Arrow PQ-encode lane: quantize to the
     int8 grid + per-subspace nearest-centroid as one numpy kernel per
-    batch. Bit-identical to the Column lane (differential-tested): the
+    batch. Bit-identical to ``_packed_codes`` (differential-tested): the
     quantization runs the SAME float64 steps (subtract, one pre-rounded
     scale multiply, floor, min-255) — correctly-rounded IEEE either way —
     distances are exact int64, and ``argmin``'s first-occurrence tie rule
@@ -1888,20 +1859,19 @@ def ann_pq(
     n_cents: int = 16,
     codebook: PQCodebook | None = None,
     exclude_id: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Top-k by PQ asymmetric distance (ADC): encode the corpus (map-only,
-    ``pq_encode``'s Arrow kernel by default), ship the m×n_cents ADC
+    ``pq_encode``'s Arrow kernel), ship the m×n_cents ADC
     table as literals, score each row with m array lookups,
     TakeOrderedAndProject by (adc_d2 ASC, id ASC). Returns (id, adc_d2).
 
     All-integer end to end, so the ranking is bit-stable and the DuckDB
-    twin matches exactly (lane differential). At scale, encode once with
+    twin matches exactly. At scale, encode once with
     ``pq_index_write`` and probe the materialized codes
     (``ann_pq_indexed``) — the scan then reads m ints per vector instead
     of the full embedding."""
     cb = codebook or pq_train(df, vec_col, id_col, m, n_cents)
-    enc = pq_encode(df, vec_col, id_col, cb, kernel=kernel)
+    enc = pq_encode(df, vec_col, id_col, cb)
     if exclude_id is not None:
         enc = enc.filter(F.col(id_col) != int(exclude_id))
     return _adc_score(enc, id_col, cb, query, k)
@@ -1933,18 +1903,15 @@ def pq_index_write(
     m: int = 8,
     n_cents: int = 16,
     codebook: PQCodebook | None = None,
-    kernel: str = "arrow",
 ) -> PQCodebook:
-    """Materialize the PQ codes as a parquet dataset (one map-only pass —
-    the Arrow kernel by default — no shuffle; the codes inherit the
+    """Materialize the PQ codes as a parquet dataset (one map-only Arrow
+    pass — no shuffle; the codes inherit the
     corpus partitioning). Unlike the IVF index there is nothing to
     bucket: ADC probes read EVERY code row by design; the win is the
     ~dim·4/m-fold smaller scan. Returns the codebook the probe side
     needs (persist it with the index — n_cents×dim ints)."""
     cb = codebook or pq_train(df, vec_col, id_col, m, n_cents)
-    pq_encode(df, vec_col, id_col, cb, kernel=kernel).write.mode(
-        "overwrite"
-    ).parquet(path)
+    pq_encode(df, vec_col, id_col, cb).write.mode("overwrite").parquet(path)
     return cb
 
 
@@ -2211,7 +2178,6 @@ def ann_ivf_pq(
     centroids: list[tuple[int, list[float]]] | None = None,
     codebook: PQCodebook | None = None,
     exclude_id: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF × PQ probe, inline form (cell assignment + PQ codes computed in
     the scan — the plan the materialized twin ``ann_ivf_pq_indexed``
@@ -2231,13 +2197,10 @@ def ann_ivf_pq(
     (the ``ann_ivf`` pattern — a .filter on the alias would re-inline the
     n_cells-cosine HOF into the pushed predicate), and only rows in the
     probed cells pay the PQ encode. The encode goes through
-    ``pq_encode`` — ``kernel='arrow'`` (default) for the batch numpy
-    lane, ``'column'`` for the pure Column-tree twin; the m·n_cents
-    distance folds of the Column lane run on Spark's interpreted HOF
-    path (~2.3 ms/row measured round 13 — the dominant cost of this
-    probe), and the two lanes are bit-identical by ``pq_encode``'s own
-    differential contract (this is exactly the composition
-    ``ivf_pq_index_write`` already uses)."""
+    ``pq_encode``'s batch numpy kernel — a Column-tree encode's m·n_cents
+    distance folds run on Spark's interpreted HOF path (~2.3 ms/row
+    measured round 13, then the dominant cost of this probe). This is
+    exactly the composition ``ivf_pq_index_write`` uses."""
     cents = centroids if centroids is not None else ivf_centroids(df, vec_col, id_col, n_cells)
     cb = codebook or pq_train(df, vec_col, id_col, m, n_cents)
     probe = _probe_cells(cents, query, nprobe)
@@ -2251,9 +2214,7 @@ def ann_ivf_pq(
     )
     if exclude_id is not None:
         assigned = assigned.filter(F.col(id_col) != int(exclude_id))
-    enc = pq_encode(
-        assigned, vec_col, id_col, cb, kernel=kernel, extras=("cell",)
-    )
+    enc = pq_encode(assigned, vec_col, id_col, cb, extras=("cell",))
     return (
         enc.select(
             F.col(id_col),
@@ -2277,7 +2238,6 @@ def ivf_pq_index_write(
     n_cents: int = 16,
     centroids: list[tuple[int, list[float]]] | None = None,
     codebook: PQCodebook | None = None,
-    kernel: str = "arrow",
 ) -> tuple[list[tuple[int, list[float]]], PQCodebook]:
     """Materialize the IVF × PQ index: every vector stored as
     (id, cell, pq_codes), bucketed by cell. A probe then pays (a)
@@ -2292,15 +2252,13 @@ def ivf_pq_index_write(
     # the cell fold stays on the Column lane (its round(cos,6) sequential
     # fold is the cross-engine-reproducible form; numpy dot is not
     # bit-identical); the PQ encode — the dominant per-row cost — runs
-    # pq_encode's kernel of choice with __cell riding through as an extra
+    # pq_encode's Arrow kernel with __cell riding through as an extra
     assigned = df.select(
         F.col(id_col),
         ivf_cell(F.col(vec_col), cents).alias("__cell"),
         F.col(vec_col),
     )
-    indexed = pq_encode(
-        assigned, vec_col, id_col, cb, kernel=kernel, extras=("__cell",)
-    )
+    indexed = pq_encode(assigned, vec_col, id_col, cb, extras=("__cell",))
     write_bucketed(indexed, table, "__cell", n_buckets, path)
     return cents, cb
 

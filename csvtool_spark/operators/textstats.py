@@ -1,9 +1,13 @@
 """Text analysis operators: token counting, quality scoring, language ID,
 document fingerprinting.
 
-Everything here is a pure ``pyspark.sql.functions`` Column tree (no UDFs) —
-stays inside whole-stage codegen and scales linearly with the scan. Each
-builder has a DuckDB-equivalent SQL shape used by the harness oracles.
+Most builders are plain ``pyspark.sql.functions`` Column trees that stay
+inside whole-stage codegen. Three per-row operators cross into Python as
+Arrow-batched pandas UDFs, where a batch kernel beats the interpreted
+higher-order-function fold or Spark has no builtin: ``lang_id``,
+``gopher_repetition`` and ``normalize_text`` (NFC). Each has exactly one
+lane. Everything scales linearly with the scan, and each builder has a
+DuckDB-equivalent SQL shape used by the harness oracles.
 """
 
 from __future__ import annotations
@@ -16,7 +20,7 @@ BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 #: Small per-language marker-word sets for the n-gram/stopword language
 #: heuristic. Real pipelines plug in fastText or CLD3 via mapInPandas; the
-#: heuristic keeps language-ID expressible as a pure column tree.
+#: heuristic keeps language-ID expressible as plain SQL (``langid_cte_sql``).
 LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "on"],
     "fr": ["le", "la", "les", "de", "des", "et", "est", "une", "dans", "pour"],
@@ -84,109 +88,50 @@ def quality_score(col: Column) -> Column:
     return F.round((length_ok * 0.4 + diversity * 0.4 + stop_ok * 0.2), 6)
 
 
-def _marker_filter(ws: list[str]):
-    # NB: a two-arg lambda would be treated as (element, index) by F.filter
-    return lambda t: t.isin(*ws)
-
-
-def lang_marker_counts(col: Column) -> dict[str, Column]:
-    low = F.lower(col)
-    return {
-        lang: F.size(F.filter(tokens(low), _marker_filter(ws))).cast("long")
-        for lang, ws in LANG_MARKERS.items()
-    }
-
-
-def _packed_marker_total(col: Column) -> Column:
-    """All marker counts in ONE pass over the token array, bit-packed into
-    an array of two longs: a literal map sends each marker word to its
-    increment pair — language i lives in long i//2, bits 0..31 or 32..63
-    (words on several lists — 'la', 'de', 'en' — carry the sum of their
-    languages' increments) — and one aggregate fold zip-adds them. 32 bits
-    per field means a single document would need 2³¹ marker tokens to
-    overflow a field (beyond any array size), and the per-long sum stays
-    < 2⁶³ — ANSI-safe. (16-bit fields in one long would crash the top
-    field at 2¹⁵ tokens: the sign bit.)"""
-    langs = list(LANG_MARKERS)
-    packed: dict[str, list[int]] = {}
-    for i, lang in enumerate(langs):
-        for w in LANG_MARKERS[lang]:
-            pair = packed.setdefault(w, [0, 0])
-            pair[i // 2] += 1 << (32 * (i % 2))
-    entries = []
-    for w, (v0, v1) in sorted(packed.items()):
-        entries.extend(
-            [F.lit(w), F.array(F.lit(v0).cast("long"), F.lit(v1).cast("long"))]
-        )
-    m = F.create_map(*entries)
-    zero = F.array(F.lit(0).cast("long"), F.lit(0).cast("long"))
-    return F.aggregate(
-        tokens(F.lower(col)),
-        zero,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.coalesce(F.try_element_at(m, t), zero),
-            lambda a, b: a + b,
-        ),
-    )
-
-
-def _unpack_count(tot: Column, i: int) -> Column:
-    return (
-        F.call_function("shiftrightunsigned", tot[i // 2], F.lit(32 * (i % 2)))
-        .bitwiseAND(F.lit(0xFFFFFFFF))
-        .cast("long")
-    )
-
-
 def cjk_char_count(col: Column) -> Column:
     return F.length(F.regexp_replace(col, r"[^一-鿿]", "")).cast("long")
 
 
-def lang_id(col: Column, kernel: str = "arrow") -> Column:
-    """Language guess per document. ``kernel``:
+def lang_id(col: Column) -> Column:
+    """Language guess per document: argmax over marker-word counts, with a
+    CJK-character override. Deterministic tie-break: language key order
+    en > fr > de > es; null text is 'unknown'.
 
-    - 'arrow' (default): ``lang_id_arrow`` — tokens are lowered/split and
-      CJK-counted JVM-side, then a vectorized Arrow kernel does the
-      marker-set counting + argmax. Spark runs higher-order-function
-      lambdas interpreted, so the packed-fold column tree pays a per-token
-      map lookup; the numpy-side membership count is ~0.3-0.5 s cheaper on
-      the sf0.1 bench corpus. Decision-rule-identical to 'jvm'
-      (differential-tested, incl. Unicode lower() edge cases — both
-      variants lower with the same JVM expression, so they cannot drift).
-    - 'jvm': ``lang_id_jvm`` — the pure column tree (whole-stage codegen,
-      no Python workers); the right choice inside larger column
-      expressions or UDF-free environments."""
-    if kernel == "arrow":
-        return lang_id_arrow(col)
-    if kernel == "jvm":
-        return lang_id_jvm(col)
-    raise ValueError(f"kernel must be 'arrow' or 'jvm', got {kernel!r}")
+    Everything Unicode-sensitive stays JVM-side: tokens arrive already
+    lowered (JVM ``lower`` + ``split``), and the CJK count and UTF-16
+    length are JVM expressions riding alongside. One Arrow batch kernel
+    then does the marker-set counting and first-max argmax — Spark runs
+    higher-order-function lambdas interpreted, so the same count as a
+    Column fold pays a per-token map lookup and measured 0.3-0.5 s slower
+    on the sf0.1 bench corpus. The DuckDB twin is ``langid_cte_sql``."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
 
+    markers = {lang: set(ws) for lang, ws in LANG_MARKERS.items()}
 
-def lang_id_jvm(col: Column) -> Column:
-    """Argmax over marker-word counts, with a CJK-character override.
-    Deterministic tie-break: language key order en > fr > de > es.
+    @pandas_udf(T.StringType())
+    def decide(toks, cjk, length):
+        import pandas as pd
 
-    The marker counts come from the single-pass packed fold; wrapping the
-    decision in a one-element ``transform`` let-binds the fold result so
-    the argmax references a computed variable instead of re-inlining the
-    fold per comparison (Catalyst CollapseProject would otherwise expand
-    it ~8× — measured 4× slower than even the four-filter formulation)."""
+        out = []
+        for tok_arr, c, n in zip(toks, cjk, length):
+            if tok_arr is None:
+                out.append("unknown")
+                continue
+            counts = {lang: 0 for lang in markers}
+            for t in tok_arr:
+                for lang, ws in markers.items():
+                    if t in ws:
+                        counts[lang] += 1
+            best, best_n = "unknown", 0
+            for lang, cnt in counts.items():  # dict order = en,fr,de,es
+                if cnt > best_n:
+                    best, best_n = lang, cnt
+            zh = c is not None and n is not None and not pd.isna(c) and not pd.isna(n) and c * 4 > n
+            out.append("zh" if zh else best)
+        return pd.Series(out)
 
-    def decide(tot: Column) -> Column:
-        # winner = first language (en,fr,de,es order) achieving the max
-        best = F.lit("unknown")
-        best_n = F.lit(0).cast("long")
-        for i, lang in enumerate(LANG_MARKERS):
-            c = _unpack_count(tot, i)
-            take = c > best_n
-            best = F.when(take, F.lit(lang)).otherwise(best)
-            best_n = F.when(take, c).otherwise(best_n)
-        return best
-
-    best = F.transform(F.array(_packed_marker_total(col)), decide)[0]
-    return F.when(cjk_char_count(col) * 4 > F.length(col), F.lit("zh")).otherwise(best)
+    return decide(tokens(F.lower(col)), cjk_char_count(col), F.length(col))
 
 
 def token_counts(df, text_col: str):
@@ -280,54 +225,6 @@ GOPHER_THRESHOLDS: dict[str, float] = {
     "dup_9gram_char_frac": 0.11,
     "dup_10gram_char_frac": 0.10,
 }
-
-
-def _rep_fold(arr: Column) -> Column:
-    """(top, dupall, dupx) over a string multiset, computed per row with
-    NO shuffle: sort the array, then one linear fold over equal-adjacent
-    runs — ``top`` = max run_count·len (heaviest element's char
-    coverage), ``dupall`` = Σ run_count·len over elements occurring ≥ 2
-    times, ``dupx`` = Σ (run_count−1)·len (beyond-first occurrences).
-    ``run == 0`` marks "no previous element", so a REAL empty-string
-    element (blank line) is never confused with the initial state."""
-    init = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("top"),
-        F.lit(0).cast("long").alias("dupall"),
-        F.lit(0).cast("long").alias("dupx"),
-    )
-
-    def flush(acc):
-        cover = acc["run"] * F.length(acc["prev"])
-        zero = F.lit(0).cast("long")
-        dup = acc["run"] >= 2
-        return (
-            F.greatest(acc["top"], cover),
-            acc["dupall"] + F.when(dup, cover).otherwise(zero),
-            acc["dupx"]
-            + F.when(
-                dup, (acc["run"] - 1) * F.length(acc["prev"])
-            ).otherwise(zero),
-        )
-
-    def step(acc, g):
-        same = (acc["run"] > 0) & (acc["prev"] == g)
-        t, da, dx = flush(acc)
-        one = F.lit(1).cast("long")
-        return F.struct(
-            g.alias("prev"),
-            F.when(same, acc["run"] + 1).otherwise(one).alias("run"),
-            F.when(same, acc["top"]).otherwise(t).alias("top"),
-            F.when(same, acc["dupall"]).otherwise(da).alias("dupall"),
-            F.when(same, acc["dupx"]).otherwise(dx).alias("dupx"),
-        )
-
-    def finish(acc):
-        t, da, dx = flush(acc)
-        return F.struct(t.alias("top"), da.alias("dupall"), dx.alias("dupx"))
-
-    return F.aggregate(F.array_sort(arr), init, step, finish)
 
 
 def _gopher_arrow(text_col: Column) -> Column:
@@ -479,9 +376,7 @@ def _gopher_arrow(text_col: Column) -> Column:
     return kernel(text_col)
 
 
-def gopher_repetition(
-    df, text_col: str, id_col: str = "doc_id", kernel: str = "arrow"
-):
+def gopher_repetition(df, text_col: str, id_col: str = "doc_id"):
     """Gopher repetition filters, char-fraction form (Rae et al. 2021
     Table A1) — the signals real pretraining pipelines threshold on,
     complementing ``repetition_stats``' word-fraction trio:
@@ -507,177 +402,15 @@ def gopher_repetition(
     for that n (signal undefined, not zero). Every doc in ``df`` appears
     exactly once.
 
-    Scale shape — the signals are PER-DOCUMENT, so two of the three
-    kernels compute them with ZERO shuffle; pick by context (all three
-    bit-identical, randomized-tested against a Python reference):
-
-    - ``kernel='arrow'`` (default): one batch-transferred pandas_udf,
-      hash-Counter per document — shuffle-free, streaming-legal and the
-      fastest measured (sf0.1 warm: 0.2 s vs 1.4 s explode vs 2.0 s
-      column; the repo's pq_encode/kmeans precedent — interpreted HOF
-      evaluation loses to an Arrow batch kernel);
-    - ``kernel='column'``: per n, sort the row's gram array and run one
-      linear fold over equal-adjacent runs (``_rep_fold``) — pure Column
-      tree, no Python workers, streaming-legal; the oracle-shaped lane;
-    - ``kernel='explode'``: the relational formulation (ONE explode over
-      lines + n-tagged grams, an (id, n, gram) count, an (id, n) fold, a
-      per-id pivot). It shuffles ~(families × tokens) rows — corpus-
-      sized traffic for a per-row metric — kept ONLY as the differential
-      twin; at 100 TB the shuffle-free kernels are the right shape."""
-    if kernel == "arrow":
-        return df.select(
-            F.col(id_col), _gopher_arrow(F.col(text_col)).alias("__g")
-        ).select(id_col, "__g.*")
-    if kernel not in ("column", "explode"):
-        raise ValueError(
-            f"kernel must be 'arrow', 'column' or 'explode', got {kernel!r}"
-        )
-    txt = F.col(text_col)
-    toks = tokens(F.lower(txt))
-    lines = F.split(txt, "\n")
-    paras = F.split(txt, "\n\n")
-    nt = F.size(toks)
-
-    if kernel == "column":
-        def gram_arr(n: int) -> Column:
-            return F.when(
-                nt >= n,
-                F.transform(
-                    F.sequence(F.lit(0), nt - F.lit(n)),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-                ),
-            )  # NULL (not empty) when too short → that n's signals stay NULL
-
-        chars = F.length(txt)
-        chars_ok = chars > 0
-        cols = []
-        for unit, arr in (("line", lines), ("para", paras)):
-            uf = _rep_fold(arr)
-            allch = F.aggregate(
-                arr,
-                F.lit(0).cast("long"),
-                lambda acc, l: acc + F.length(l),
-            )
-            cols.extend([
-                (
-                    (F.size(arr) - F.size(F.array_distinct(arr))).cast("double")
-                    / F.size(arr)
-                ).alias(f"dup_{unit}_frac"),
-                F.when(allch > 0, uf["dupx"].cast("double") / allch).alias(
-                    f"dup_{unit}_char_frac"
-                ),
-            ])
-        for n in GOPHER_TOP_NS:
-            cols.append(
-                F.when(
-                    chars_ok,
-                    _rep_fold(gram_arr(n))["top"].cast("double") / chars,
-                ).alias(f"top_{n}gram_char_frac")
-            )
-        for n in GOPHER_DUP_NS:
-            cols.append(
-                F.when(
-                    # the nt >= n guard matters: least(1.0, NULL) is 1.0
-                    # (least SKIPS nulls), so an unguarded short doc
-                    # would read as maximally duplicated instead of
-                    # undefined (round-9 third review, verified live)
-                    chars_ok & (nt >= n),
-                    F.least(
-                        F.lit(1.0),
-                        _rep_fold(gram_arr(n))["dupall"].cast("double") / chars,
-                    ),
-                ).alias(f"dup_{n}gram_char_frac")
-            )
-        return df.select(F.col(id_col), *cols)
-
-    def grams(n: int) -> Column:
-        sh = F.transform(
-            F.sequence(F.lit(0), nt - F.lit(n)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-        return F.when(nt >= n, sh).otherwise(F.array().cast("array<string>"))
-
-    def tag(n: int, arr: Column) -> Column:
-        return F.transform(
-            arr,
-            lambda g: F.struct(
-                F.lit(n).cast("int").alias("n"), g.alias("g")
-            ),
-        )
-
-    entries = F.flatten(
-        F.array(
-            tag(0, lines),
-            tag(-1, paras),  # paragraphs ride the same pipeline, n = -1
-            *[tag(n, grams(n)) for n in (*GOPHER_TOP_NS, *GOPHER_DUP_NS)],
-        )
-    )
-    occ = df.select(
-        F.col(id_col),
-        F.length(txt).cast("long").alias("__chars"),
-        F.explode(entries).alias("__e"),
-    ).select(
-        id_col,
-        "__chars",
-        F.col("__e")["n"].alias("__n"),
-        F.col("__e")["g"].alias("__g"),
-    )
-    pg = occ.groupBy(id_col, "__n", "__g").agg(
-        F.count(F.lit(1)).alias("__c"), F.first("__chars").alias("__chars")
-    ).select(
-        id_col, "__n", "__c", "__chars", F.length("__g").cast("long").alias("__l")
-    )
-    dup_c = F.when(F.col("__c") >= 2, F.col("__c"))
-    pn = pg.groupBy(id_col, "__n").agg(
-        F.first("__chars").alias("__chars"),
-        F.sum("__c").alias("__tot"),
-        F.sum(F.coalesce(dup_c - 1, F.lit(0))).alias("__dupocc"),
-        F.sum(F.coalesce((dup_c - 1) * F.col("__l"), F.lit(0))).alias("__dupx"),
-        F.sum(F.coalesce(dup_c * F.col("__l"), F.lit(0))).alias("__dupall"),
-        F.sum(F.col("__c") * F.col("__l")).alias("__allchars"),
-        F.max(F.col("__c") * F.col("__l")).alias("__topcover"),
-    )
-    n_is = lambda n: F.col("__n") == F.lit(n)  # noqa: E731
-    chars_ok = F.col("__chars") > 0
-    cols = []
-    for unit, tag_n in (("line", 0), ("para", -1)):
-        cols.extend([
-            F.max(
-                F.when(
-                    n_is(tag_n),
-                    F.col("__dupocc").cast("double") / F.col("__tot"),
-                )
-            ).alias(f"dup_{unit}_frac"),
-            F.max(
-                F.when(
-                    n_is(tag_n) & (F.col("__allchars") > 0),
-                    F.col("__dupx").cast("double") / F.col("__allchars"),
-                )
-            ).alias(f"dup_{unit}_char_frac"),
-        ])
-    for n in GOPHER_TOP_NS:
-        cols.append(
-            F.max(
-                F.when(
-                    n_is(n) & chars_ok,
-                    F.col("__topcover").cast("double") / F.col("__chars"),
-                )
-            ).alias(f"top_{n}gram_char_frac")
-        )
-    for n in GOPHER_DUP_NS:
-        cols.append(
-            F.max(
-                F.when(
-                    n_is(n) & chars_ok,
-                    F.least(
-                        F.lit(1.0),
-                        F.col("__dupall").cast("double") / F.col("__chars"),
-                    ),
-                )
-            ).alias(f"dup_{n}gram_char_frac")
-        )
-    stats = pn.groupBy(id_col).agg(*cols)
-    return df.select(F.col(id_col)).join(stats, id_col, "left")
+    Scale shape — the signals are PER-DOCUMENT, so one batch-transferred
+    Arrow kernel (``_gopher_arrow``) computes them with ZERO shuffle and is
+    streaming-legal. It measured fastest at sf0.1 warm: 0.2 s vs 1.4 s for
+    a relational explode/count/pivot and 2.0 s for a sorted-run Column
+    fold (interpreted HOF evaluation loses to an Arrow batch kernel). The
+    DuckDB twin is ``gopher_oracle_sql``."""
+    return df.select(
+        F.col(id_col), _gopher_arrow(F.col(text_col)).alias("__g")
+    ).select(id_col, "__g.*")
 
 
 def gopher_oracle_sql(
@@ -972,47 +705,6 @@ def collocations(df, text_col: str, k: int = 50, min_count: int = 5):
         .orderBy(F.col("lift_ppm").desc(), "term_a", "term_b")
         .limit(int(k))
     )
-
-
-def lang_id_arrow(col: Column) -> Column:
-    """Arrow-vectorized twin of ``lang_id``. Everything Unicode-sensitive
-    stays JVM-side so the two variants CANNOT diverge on locale/encoding
-    semantics: tokens arrive already lowered (JVM ``lower``+``split``),
-    the CJK count and UTF-16 length are JVM expressions riding alongside.
-    The kernel is pure set-membership counting + first-max argmax over a
-    tiny dict — the part the interpreted HOF fold made expensive
-    (per-token map lookup allocating a packed pair per step). Same
-    decision rule, differential-tested equal to ``lang_id``."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    markers = {lang: set(ws) for lang, ws in LANG_MARKERS.items()}
-
-    @pandas_udf(T.StringType())
-    def decide(toks, cjk, length):
-        import pandas as pd
-
-        out = []
-        for tok_arr, c, n in zip(toks, cjk, length):
-            if tok_arr is None:
-                # null text: the column tree's when-chain falls through to
-                # 'unknown' (every condition evaluates null) — match it
-                out.append("unknown")
-                continue
-            counts = {lang: 0 for lang in markers}
-            for t in tok_arr:
-                for lang, ws in markers.items():
-                    if t in ws:
-                        counts[lang] += 1
-            best, best_n = "unknown", 0
-            for lang, cnt in counts.items():  # dict order = en,fr,de,es
-                if cnt > best_n:
-                    best, best_n = lang, cnt
-            zh = c is not None and n is not None and not pd.isna(c) and not pd.isna(n) and c * 4 > n
-            out.append("zh" if zh else best)
-        return pd.Series(out)
-
-    return decide(tokens(F.lower(col)), cjk_char_count(col), F.length(col))
 
 
 def bigram_array(text_col: str) -> Column:
@@ -1728,7 +1420,7 @@ def langid_cte_sql(
     ``text_col`` if downstream CTEs need it) plus ``lang_guess`` computed
     with the EXACT ``lang_id`` decision rule — marker lists and the
     greatest-chain tie-break are GENERATED from ``LANG_MARKERS``, so the
-    SQL twin cannot drift from the Column implementation (round-8 review:
+    SQL twin cannot drift from ``lang_id``'s marker sets (round-8 review:
     the CASE chain had been copy-pasted into four oracle sites).
 
     NB (round-8 verdict advisory): the generated greatest-chain is

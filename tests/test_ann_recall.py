@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from csvtool_spark.operators.similarity import ann_recall_eval
+from csvtool_spark.operators.similarity import ann_recall_eval, ann_recall_reference
 from tests.conftest import SF_SMALL
 
 
@@ -52,29 +52,27 @@ def test_recall_release_contract(spark):
     assert release_stages(out) == 0  # idempotent
 
 
-def test_recall_kernel_differential(spark):
-    # round-13 optimization: the arrow scored lane (numpy column-wise
-    # fold accumulation + JVM round) must match the Column-tree twin
-    # bit-for-bit — k large enough that every (query, row) pair's cosine
-    # ordering is exercised, so a single differing double flips the hits
+def test_recall_matches_column_reference(spark):
+    # the Arrow scoring (numpy column-wise fold accumulation + JVM round)
+    # must match the Column-tree reference bit-for-bit — k large enough
+    # that every (query, row) pair's cosine ordering is exercised, so a
+    # single differing double flips the hits
     e = _emb(spark)
     qs = _queries(e)
     for k in (5, 10_000):
         a = sorted(
-            map(tuple, ann_recall_eval(
-                e, "embedding", "vec_id", qs, k=k, kernel="arrow"
-            ).collect())
+            map(tuple, ann_recall_eval(e, "embedding", "vec_id", qs, k=k).collect())
         )
         c = sorted(
-            map(tuple, ann_recall_eval(
-                e, "embedding", "vec_id", qs, k=k, kernel="column"
+            map(tuple, ann_recall_reference(
+                e, "embedding", "vec_id", qs, k=k
             ).collect())
         )
         assert a == c
 
 
-def test_recall_kernel_null_and_ragged_rows(spark):
-    # the arrow lane's invalid-row shape must equal the Column lane's:
+def test_recall_null_and_ragged_rows_match_reference(spark):
+    # the Arrow scoring's invalid-row shape must equal the reference's:
     # NULL vector / wrong-dim vector -> NULL cosine, all-zero signatures
     from pyspark.sql import Row
 
@@ -90,25 +88,41 @@ def test_recall_kernel_null_and_ragged_rows(spark):
     )
     df = e.select("vec_id", "embedding").unionByName(extra)
     a = sorted(map(tuple, ann_recall_eval(
-        df, "embedding", "vec_id", qs, k=7, kernel="arrow").collect()))
-    c = sorted(map(tuple, ann_recall_eval(
-        df, "embedding", "vec_id", qs, k=7, kernel="column").collect()))
+        df, "embedding", "vec_id", qs, k=7).collect()))
+    c = sorted(map(tuple, ann_recall_reference(
+        df, "embedding", "vec_id", qs, k=7).collect()))
     assert a == c
 
 
-def test_ivf_pq_kernel_differential(spark):
-    # ann_ivf_pq now routes the encode through pq_encode's arrow kernel
-    # by default; the full probe output must equal the Column-lane twin
-    from csvtool_spark.operators.similarity import ann_ivf_pq
+def test_ivf_pq_matches_column_encode(spark):
+    # ann_ivf_pq routes the encode through pq_encode's Arrow kernel; the
+    # full probe output must equal the same probe built on the Column-tree
+    # cell fold and encode (_packed_codes)
+    from csvtool_spark.operators import similarity as sim
 
     e = _emb(spark)
     qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first()["embedding"]]
-    kw = dict(k=10, n_cells=8, nprobe=3, m=8, n_cents=8, exclude_id=0)
-    a = [tuple(r) for r in ann_ivf_pq(
-        e, "embedding", "vec_id", qvec, kernel="arrow", **kw).collect()]
-    c = [tuple(r) for r in ann_ivf_pq(
-        e, "embedding", "vec_id", qvec, kernel="column", **kw).collect()]
-    assert a == c
+    a = [tuple(r) for r in sim.ann_ivf_pq(
+        e, "embedding", "vec_id", qvec, k=10, n_cells=8, nprobe=3, m=8,
+        n_cents=8, exclude_id=0).collect()]
+    cents = sim.ivf_centroids(e, "embedding", "vec_id", 8)
+    cb = sim.pq_train(e, "embedding", "vec_id", 8, 8)
+    probe = [int(p) for p in sim._probe_cells(cents, qvec, 3)]
+    table = sim._adc_table(cb, qvec)
+    ref = (
+        e.filter(F.col("vec_id") != 0)
+        .select(
+            "vec_id",
+            sim.ivf_cell(F.col("embedding"), cents).alias("cell"),
+            sim._packed_codes(cb, "embedding")["pq"].alias("pq_codes"),
+        )
+        .filter(F.col("cell").isin(*probe))
+        .select("vec_id", "cell",
+                sim._adc_sum(table, F.col("pq_codes")).alias("adc_d2"))
+        .orderBy(F.col("adc_d2").asc(), F.col("vec_id"))
+        .limit(10)
+    )
+    assert a == [tuple(r) for r in ref.collect()]
 
 
 def test_ivf_cell_kernel_differential(spark):

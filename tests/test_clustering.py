@@ -135,68 +135,91 @@ def test_kmeans_distance_envelope_enforced(spark):
         kmeans_fit(big, "embedding", "vec_id", k=2, scale=10_000_000)
 
 
-def test_kmeans_assignment_is_map_only(spark):
-    # the full-corpus pass must be map-only in BOTH lanes: no join, no
-    # shuffle — centroids ride the closure. The default (arrow) lane is
-    # the vectorized batch kernel (MapInPandas, never per-row Python
-    # eval); the column lane is the UDF-free oracle twin.
+def _oracle_frame(rows):
+    """A DuckDB connection holding ``rows`` as ``embeddings`` — the
+    kmeans_oracle_sql input over the same rows a Spark frame holds."""
+    import duckdb
+    import pyarrow as pa
+
+    ids, vecs = zip(*rows)
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table({
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float64())),
+        }),
+    )
+    return con
+
+
+def test_kmeans_assignment_is_map_only(spark, duck):
+    # the full-corpus pass must be map-only: no join, no shuffle —
+    # centroids ride the closure of the vectorized batch kernel
+    # (MapInPandas, never per-row Python eval). Its answer on the same
+    # frame is the DuckDB oracle's.
+    from csvtool_spark.oracle import compare
+
     e = _emb(spark)
     cents = kmeans_fit(e, "embedding", "vec_id", k=4, iters=1)
-    arrow = (
+    plan = (
         kmeans_assign(e, "embedding", "vec_id", cents)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "Exchange" not in arrow and "Join" not in arrow
-    assert "MapInPandas" in arrow
-    assert "ArrowEvalPython" not in arrow and "BatchEvalPython" not in arrow
-    column = (
-        kmeans_assign(e, "embedding", "vec_id", cents, kernel="column")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in column and "Join" not in column
-    for pynode in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert pynode not in column
+    assert "Exchange" not in plan and "Join" not in plan
+    assert "MapInPandas" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    out = kmeans_assign(e, "embedding", "vec_id", cents, extra_cols=("label",))
+    assert compare(out, duck, kmeans_oracle_sql(k=4, iters=1)) is None
 
 
-def test_kmeans_lane_differential(spark):
-    """Arrow batch kernel ≡ Column fold, bit-for-bit: fit centroids and
-    full assignment on the corpus plus a signed random frame with null
-    vectors (the minhash Arrow-twin contract)."""
+def test_kmeans_matches_oracle_on_corpus_and_null_frame(spark, duck):
+    """Fit + full assignment ≡ the DuckDB oracle, bit-for-bit, on the
+    corpus and on a signed random frame with null vectors (exact int64
+    dist2 means the fitted centroids agree too)."""
     import random
 
+    from csvtool_spark.oracle import compare
+
     e = _emb(spark)
-    ca = kmeans_fit(e, "embedding", "vec_id", k=6, iters=2, kernel="arrow")
-    cc = kmeans_fit(e, "embedding", "vec_id", k=6, iters=2, kernel="column")
-    assert ca == cc
-    aa = kmeans_assign(e, "embedding", "vec_id", ca, extra_cols=("label",))
-    ac = kmeans_assign(e, "embedding", "vec_id", cc, extra_cols=("label",),
-                       kernel="column")
-    assert sorted(map(tuple, aa.collect())) == sorted(map(tuple, ac.collect()))
+    out = kmeans(e, "embedding", "vec_id", k=6, iters=2, extra_cols=("label",))
+    assert compare(out, duck, kmeans_oracle_sql(k=6, iters=2)) is None
 
     rng = random.Random(23)
     rows = [
         (i, None if i % 17 == 0 else [rng.uniform(-3, 3) for _ in range(5)])
         for i in range(300)
     ]
-    d = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    fa = kmeans_fit(d, "embedding", "vec_id", k=7, iters=3, kernel="arrow")
-    fc = kmeans_fit(d, "embedding", "vec_id", k=7, iters=3, kernel="column")
-    assert fa == fc
-    ra = kmeans_assign(d, "embedding", "vec_id", fa).collect()
-    rc = kmeans_assign(d, "embedding", "vec_id", fc, kernel="column").collect()
-    assert sorted(map(tuple, ra)) == sorted(map(tuple, rc))
+    schema = "vec_id long, embedding array<double>"
+    d = spark.createDataFrame(rows, schema)
+    con = _oracle_frame(rows)
+    out = kmeans(d, "embedding", "vec_id", k=7, iters=3)
+    assert compare(out, con, kmeans_oracle_sql(k=7, iters=3, extra_cols="")) is None
+    nulls = {r["vec_id"] for r in out.collect() if r["cluster"] is None}
+    assert nulls == {i for i in range(300) if i % 17 == 0}
 
 
 def test_kmeans_arrow_tie_breaks_to_lowest_cluster(spark):
     # a point exactly equidistant from two centroids must take the lower
-    # cluster id in both lanes (argmin first-occurrence == struct-min)
+    # cluster id (argmin first-occurrence == the oracle's (dist2, j) order)
+    from csvtool_spark.oracle import compare
+
     d = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
     cents = [[0, 0], [20000, 0]]  # quantized grid: point lands at 10000
-    for kern in ("arrow", "column"):
-        r = kmeans_assign(d, "embedding", "vec_id", cents, kernel=kern).collect()
-        assert r[0]["cluster"] == 0 and r[0]["dist2"] == 10000**2
+    r = kmeans_assign(d, "embedding", "vec_id", cents).collect()
+    assert r[0]["cluster"] == 0 and r[0]["dist2"] == 10000**2
+    # same tie through fit + assign: seeds ids 0/1 are those centroids,
+    # id 3 balances id 2's pull on cluster 0, so the tie survives round 1
+    rows = [(0, [0.0, 0.0]), (1, [2.0, 0.0]), (2, [1.0, 0.0]), (3, [-1.0, 0.0])]
+    schema = "vec_id long, embedding array<double>"
+    out = kmeans(spark.createDataFrame(rows, schema), "embedding", "vec_id",
+                 k=2, iters=1)
+    tie = [r for r in out.collect() if r["vec_id"] == 2][0]
+    assert tie["cluster"] == 0 and tie["dist2"] == 10000**2
+    con = _oracle_frame(rows)
+    assert compare(out, con, kmeans_oracle_sql(k=2, iters=1, extra_cols="")) is None
 
 
 def test_half_away_np_matches_spark_round(spark):

@@ -58,8 +58,7 @@ def _corpus(spark, n_hot: int):
 
 def test_over_cap_bucket_contributes_zero_pairs(spark):
     df = _corpus(spark, N_HOT)
-    sigs = _minhash_signatures(df, "text", "doc_id", BANDS * ROWS, 3,
-                               "arrow", "xx64")
+    sigs = _minhash_signatures(df, "text", "doc_id", BANDS * ROWS, 3, "xx64")
     banded = _banded(sigs, "doc_id", "__sig", BANDS, ROWS).persist()
     try:
         sizes = {

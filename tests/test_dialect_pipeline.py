@@ -113,7 +113,7 @@ def test_column_stages_match_operators(eng, docs):
 
     expect = docs.select(
         "doc_id",
-        textstats.lang_id(F.col("text"), kernel="jvm").alias("lang_guess"),
+        textstats.lang_id(F.col("text")).alias("lang_guess"),
         textstats.quality_score(F.col("text")).alias("quality"),
         textstats.token_count(F.col("text")).alias("n_tokens"),
         textstats.content_fingerprint(F.col("text")).alias("content_fp"),
@@ -391,7 +391,7 @@ def test_langid_keep_gate(eng, docs):
     expect = {
         r["doc_id"]
         for r in docs.select(
-            "doc_id", lang_id(F.col("text"), kernel="jvm").alias("g")
+            "doc_id", lang_id(F.col("text")).alias("g")
         ).collect()
         if r["g"] == "en"
     }

@@ -190,6 +190,21 @@ def test_dialect_curate_single_exchange(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_curate_pipe_and_batch_one_arrow_crossing_one_exchange(spark):
+    """Pipe and batch curate run the same langid lane: each plan holds
+    exactly ONE Arrow crossing (the langid kernel) and ONE hash exchange
+    (the exact-dedup rank). Zero crossings means a second langid lane
+    crept back. No Filter may sit below the crossing: one there was
+    pushed under the annotate projection, so the quality tree it reads
+    is evaluated twice per row (the class ``planshape.filter_computed``
+    guards)."""
+    for name in ("q_dialect_curate", "q_pipeline_curate"):
+        plan = _plan(ALL_QUERIES[name](spark, SF_SMALL))
+        assert plan.count("ArrowEvalPython") == 1, (name, plan)
+        assert plan.count("Exchange hashpartitioning") == 1, (name, plan)
+        assert "- Filter " not in plan[plan.index("ArrowEvalPython"):], (name, plan)
+
+
 def test_pipe_chunk_no_extra_shuffle_on_explode(spark):
     """The langid-gate + chunk pipe is projections, filters and one
     per-row explode — carried columns ride the explode itself

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from csvtool_spark.operators.similarity import (
     PQCodebook,
+    _packed_codes,
     ann_pq,
     ann_pq_indexed,
     pq_encode,
@@ -199,24 +200,32 @@ def test_pq_encode_rejects_dim_mismatch_and_null(spark):
         pq_encode(withnull, "embedding", "vec_id", cb).collect()
 
 
+def _column_codes(d, cb):
+    """(vec_id, pq_codes) through the Column-tree encode ``_packed_codes``
+    — the reference the Arrow ``pq_encode`` is checked against."""
+    return d.select(
+        "vec_id", _packed_codes(cb, "embedding")["pq"].alias("pq_codes")
+    )
+
+
 def test_pq_encode_single_quantization_plan(spark):
-    """The COLUMN lane's nested let-bind must quantize each vector ONCE:
-    `floor` (only inside _sq_code) appears exactly once in the encode
-    plan — naming the code transform inside every centroid slice used to
-    inline it m*n_cents times on the interpreted HOF path."""
+    """The Column-tree encode's nested let-bind must quantize each vector
+    ONCE: `floor` (only inside _sq_code) appears exactly once in the
+    encode plan — naming the code transform inside every centroid slice
+    used to inline it m*n_cents times on the interpreted HOF path."""
     d = _vecs(spark, _rand_corpus(51, 10, 16))
     cb = pq_train(d, "embedding", "vec_id", m=4, n_cents=8)
     plan = (
-        pq_encode(d, "embedding", "vec_id", cb, kernel="column")
-        ._jdf.queryExecution().executedPlan().toString()
+        _column_codes(d, cb)._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("FLOOR") + plan.count("floor(") == 1, plan
 
 
 @pytest.mark.parametrize("seed", range(3))
-def test_pq_encode_lane_differential(spark, seed):
-    """Arrow numpy kernel ≡ Column tree, bit for bit — incl. values at
-    the bounds (code 255 edge) and the degenerate constant corpus."""
+def test_pq_encode_matches_column_encode(spark, seed):
+    """Arrow numpy kernel ≡ the Column-tree ``_packed_codes``, bit for
+    bit — incl. values at the bounds (code 255 edge) and the degenerate
+    constant corpus."""
     vecs = _rand_corpus(seed * 29 + 1, 50, 16)
     # force the exact bound values into the corpus (the least(255, ...)
     # edge where the pre-rounded scale can push past 255)
@@ -227,19 +236,18 @@ def test_pq_encode_lane_differential(spark, seed):
     cb = pq_train(d, "embedding", "vec_id", m=4, n_cents=8)
     a = sorted(
         (r["vec_id"], tuple(r["pq_codes"]))
-        for r in pq_encode(d, "embedding", "vec_id", cb, kernel="arrow").collect()
+        for r in pq_encode(d, "embedding", "vec_id", cb).collect()
     )
     c = sorted(
         (r["vec_id"], tuple(r["pq_codes"]))
-        for r in pq_encode(d, "embedding", "vec_id", cb, kernel="column").collect()
+        for r in _column_codes(d, cb).collect()
     )
     assert a == c and a
-    # degenerate bounds pin every code to centroid 0 on both lanes
+    # degenerate bounds pin every code to centroid 0 in both encodes
     dd = _vecs(spark, [[0.25] * 8] * 4)
     cbd = pq_train(dd, "embedding", "vec_id", m=2, n_cents=2)
-    for kern in ("arrow", "column"):
-        rows = pq_encode(dd, "embedding", "vec_id", cbd, kernel=kern).collect()
-        assert all(list(r["pq_codes"]) == [0, 0] for r in rows)
+    for enc in (pq_encode(dd, "embedding", "vec_id", cbd), _column_codes(dd, cbd)):
+        assert all(list(r["pq_codes"]) == [0, 0] for r in enc.collect())
 
 
 def test_pq_encode_arrow_null_lane(spark):
@@ -255,8 +263,7 @@ def test_pq_encode_arrow_null_lane(spark):
     clean = _vecs(spark, good)
     cb = pq_train(clean, "embedding", "vec_id", m=2, n_cents=4)
     got = {r["vec_id"]: r["pq_codes"] for r in
-           pq_encode(d, "embedding", "vec_id", cb,
-                     kernel="arrow", on_invalid="null").collect()}
+           pq_encode(d, "embedding", "vec_id", cb, on_invalid="null").collect()}
     assert got[100] is None and got[101] is None and got[102] is None
     exp = {r["vec_id"]: list(r["pq_codes"]) for r in
            pq_encode(clean, "embedding", "vec_id", cb).collect()}

@@ -1,6 +1,6 @@
 """Lloyd-trained PQ codebooks (similarity.pq_train_kmeans) and the
 sampled-vs-trained recall report (pq_recall_compare / q_pq_compare):
-determinism, Arrow/Column lane identity, the iters=0 ≡ sampled seed
+determinism, the trained codebook ≡ its DuckDB twin, the iters=0 ≡ sampled seed
 property, trained-beats-sampled mean recall, and the round-7 ADVICE
 hardening (empty-corpus pq_train guard, _izdist2 int64 widening,
 _adc_score NULL-codes filter)."""
@@ -35,15 +35,27 @@ def _queries(emb, n):
     return {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
 
 
-def test_trained_deterministic_and_lanes_identical(emb):
+def test_trained_deterministic_and_matches_oracle(emb, duck):
+    from csvtool_spark.scale_queries import (
+        _PQ_BASE_CTES,
+        _PQ_DSUB,
+        _pq_trained_ctes,
+    )
+
     a = pq_train_kmeans(emb, "embedding", "vec_id", m=8, n_cents=16, iters=2)
     b = pq_train_kmeans(emb, "embedding", "vec_id", m=8, n_cents=16, iters=2)
-    c = pq_train_kmeans(
-        emb, "embedding", "vec_id", m=8, n_cents=16, iters=2, kernel="column"
-    )
     assert a.cents == b.cents  # deterministic across runs
-    assert a.cents == c.cents  # Arrow and Column lanes bit-identical
     assert (a.mn, a.mx, a.m) == (b.mn, b.mx, b.m)
+    # the q_pq_compare twin's trained codebook (m=8, 16 cells, 2 rounds),
+    # bit for bit
+    twin = duck.execute(
+        f"WITH {_PQ_BASE_CTES}, {_pq_trained_ctes(2)} "
+        "SELECT s, cell, d, cq FROM tc2"
+    ).fetchall()
+    want = [[None] * (8 * _PQ_DSUB) for _ in range(16)]
+    for s, cell, d, cq in twin:
+        want[cell][s * _PQ_DSUB + d - 1] = cq
+    assert a.cents == want
 
 
 def test_iters0_is_sampled_codebook(emb):

@@ -143,18 +143,9 @@ def _py_gopher(rows, top_ns, dup_ns):
     return out
 
 
-@pytest.mark.parametrize("kernel", ["arrow", "column", "explode"])
-@pytest.mark.parametrize("seed", range(3))
-def test_gopher_repetition_matches_python_reference(spark, seed, kernel):
-    """All THREE kernels against the Python reference (round-9 third
-    review: the column lane shipped untested and read short docs as
-    maximally duplicated via least(1.0, NULL))."""
-    from csvtool_spark.operators.textstats import (
-        GOPHER_DUP_NS,
-        GOPHER_TOP_NS,
-        gopher_repetition,
-    )
-
+def _gopher_rows(seed):
+    """Seeded tiny-vocabulary docs plus the null, empty, short and
+    duplicate-paragraph edge rows."""
     r = random.Random(100 + seed)
     vocab = ["aa", "b", "ccc", "dd"]
 
@@ -168,12 +159,26 @@ def test_gopher_repetition_matches_python_reference(spark, seed, kernel):
             for _ in range(nl)
         ).rstrip("\n")
 
-    rows = [(i, doc()) for i in range(8)] + [
+    return [(i, doc()) for i in range(8)] + [
         (8, None), (9, ""), (10, "one two three"),  # < 5 tokens: dup_n NULL
         (11, "x y\n\nx y\n\nx y\n\nz"),  # duplicate paragraphs
     ]
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_gopher_repetition_matches_python_reference(spark, seed):
+    """The Arrow kernel against the Python reference, incl. null, empty
+    and short docs (round-9 third review: a Column lane once read short
+    docs as maximally duplicated via least(1.0, NULL))."""
+    from csvtool_spark.operators.textstats import (
+        GOPHER_DUP_NS,
+        GOPHER_TOP_NS,
+        gopher_repetition,
+    )
+
+    rows = _gopher_rows(seed)
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    res = gopher_repetition(df, "text", "doc_id", kernel=kernel)
+    res = gopher_repetition(df, "text", "doc_id")
     cols = [c for c in res.columns if c != "doc_id"]
     got = {rr["doc_id"]: {c: rr[c] for c in cols} for rr in res.collect()}
     want = _py_gopher(rows, GOPHER_TOP_NS, GOPHER_DUP_NS)
@@ -185,3 +190,27 @@ def test_gopher_repetition_matches_python_reference(spark, seed, kernel):
                 assert g is None, (i, c, g)
             else:
                 assert g is not None and abs(g - w) < 1e-12, (i, c, g, w)
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_gopher_repetition_matches_duckdb_oracle(spark, seed):
+    """The same rows against the DuckDB twin ``gopher_oracle_sql``: the
+    second reference for the one gopher lane, compared exactly."""
+    import duckdb
+
+    from csvtool_spark.operators.textstats import (
+        gopher_oracle_sql,
+        gopher_repetition,
+    )
+
+    rows = _gopher_rows(seed)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    res = gopher_repetition(df, "text", "doc_id")
+    got = sorted(tuple(r) for r in res.collect())
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    n = len(res.columns)
+    want = sorted(
+        tuple(r[:n]) for r in con.execute(gopher_oracle_sql()).fetchall()
+    )
+    assert got == want and len(got) == len(rows)

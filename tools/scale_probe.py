@@ -189,7 +189,7 @@ def probe_minhash(docs: DataFrame) -> dict:
     quantity MAX_BUCKET bounds) plus the full verified-pair pipeline."""
     cand = candidate_pairs(
         _banded(
-            _minhash_signatures(docs, "text", "doc_id", 64, 3, "arrow", "xx64"),
+            _minhash_signatures(docs, "text", "doc_id", 64, 3, "xx64"),
             "doc_id", "__sig", 16, 4, "xx64",
         ),
         "doc_id",
